@@ -473,10 +473,27 @@ def test_aqe_skew_join_fires_on_zipf_keys(spark):
     partition duplicates the build side per split; a wrong merge
     would duplicate output rows). Thresholds are lowered (and
     restored) because the defaults are sized for real executors, not
-    a 200k-row fixture."""
+    a 200k-row fixture.
+
+    The test also fixes its own shuffle width and input partitions,
+    because both otherwise follow the host's core count
+    (SPARK_GRAFT_CPUS sets local[N] and the session's
+    spark.sql.shuffle.partitions). With P reduce partitions, the
+    partition holding user 0 (share p0 = ln2/ln2000 ~ 0.091 of the
+    rows) is about 1 + p0*P/(1 - p0) times the median: 1.40 at P=4,
+    1.80 at P=8. A split needs that ratio above skewedPartitionFactor
+    (1.5), i.e. P > 0.5*(1 - p0)/p0 ~ 5, so P is set to 8, the suite's
+    default width. Re-check this bound when the factor or the key
+    ladder changes. And spark.range(n) splits into defaultParallelism
+    partitions: at local[1] both join inputs have one partition, which
+    already satisfies the join's distribution, so no Exchange is
+    planned and no skew split can happen. Both ranges therefore get 8
+    partitions explicitly (same rows, only their partitioning
+    changes)."""
     from pyspark.sql import functions as F
 
     confs = {
+        "spark.sql.shuffle.partitions": "8",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.5",
@@ -494,11 +511,11 @@ def test_aqe_skew_join_fires_on_zipf_keys(spark):
         n_ev, n_u = 400_000, 2_000
         u = (F.pmod(F.xxhash64("id", F.lit(9), F.lit(2)),
                     F.lit(1 << 20)) + F.lit(0.5)) / F.lit(1 << 20)
-        ev = spark.range(n_ev).select(
+        ev = spark.range(0, n_ev, 1, 8).select(
             F.col("id").alias("event_id"),
             (F.floor(F.pow(F.lit(float(n_u)), u)) - 1)
             .cast("long").alias("user_id"))
-        dim = spark.range(n_u).select(
+        dim = spark.range(0, n_u, 1, 8).select(
             F.col("id").alias("user_id"), (F.col("id") % 25).alias("nk"))
 
         j = ev.join(dim, "user_id").groupBy("nk").agg(
