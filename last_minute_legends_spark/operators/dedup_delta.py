@@ -67,6 +67,7 @@ from last_minute_legends_spark.operators.dedup import (
     _xx_perm_hash,
     minhash_lsh_pairs,
 )
+from last_minute_legends_spark.sources import swap
 
 _BANDS = "bands"
 _PAIRS = "pairs"
@@ -173,10 +174,9 @@ def write_band_index(docs: DataFrame, path: str, threshold: float = 0.8,
 
 
 def stored_pairs(spark: SparkSession, path: str) -> DataFrame:
-    # probe-side self-heal: a compaction crash mid-swap leaves the
-    # layout stranded until recovery runs — call it from every read
-    # path, the way probe_topk calls recover_interrupted_rebuild
-    recover_interrupted_compaction(path)
+    # probe-side self-heal: a maintenance pass that crashed mid-swap
+    # is settled on the next read (sources/swap.py)
+    swap.recover(path)
     return spark.read.parquet(os.path.join(path, _PAIRS))
 
 
@@ -186,7 +186,8 @@ def absorb_delta(spark: SparkSession, indexed_docs: DataFrame,
                  text_col: str = "text", n: int = 3,
                  perm_hash=None, band_hash=None, append: bool = True,
                  static_max: int = DELTA_STATIC_MAX,
-                 return_new: bool = False, post_pairs=None) -> DataFrame:
+                 return_new: bool = False, post_pairs=None
+                 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Absorb one epoch: returns the FULL updated pair set
     (stored pairs ∪ all pairs involving a delta doc), value-identical
     to a single-shot ``minhash_lsh_pairs`` over indexed ∪ delta
@@ -209,7 +210,10 @@ def absorb_delta(spark: SparkSession, indexed_docs: DataFrame,
     snapshot with ``localCheckpoint(eager=True)`` (a LogicalRDD has
     no file source to refresh) — tests/test_dedup_delta.py's chained
     cluster test does exactly this."""
-    recover_interrupted_compaction(path)
+    if return_new and not append:
+        raise ValueError("return_new=True needs append=True: only an "
+                         "appending absorb persists the epoch's new pairs")
+    swap.recover(path)
     with open(os.path.join(path, _PARAMS)) as fh:
         params = json.load(fh)
     if params["bv_buckets"] != BV_BUCKETS or params["n"] != n:
@@ -390,17 +394,21 @@ def absorb_delta(spark: SparkSession, indexed_docs: DataFrame,
         # explicit (band, bvb, bv) sort: prefix-satisfies the
         # dynamic-partition writer's required ordering, so no
         # implicit partition-column sort is inserted above ours
-        # and the in-file bv order is guaranteed by construction
-        (bands_d.withColumn("bvb", _bvb(F.col("bv")))
-         .repartition(_fanout_parts(bands_d), F.col("band"), F.col("bvb"))
-         .sortWithinPartitions("band", "bvb", "bv")
-         .write.partitionBy("band", "bvb").mode("append")
-         .parquet(os.path.join(path, _BANDS)))
+        # and the in-file bv order is guaranteed by construction.
+        # The worker is joined even when the append raises, so a
+        # failed absorb never leaves a fold running behind it.
+        try:
+            (bands_d.withColumn("bvb", _bvb(F.col("bv")))
+             .repartition(_fanout_parts(bands_d), F.col("band"),
+                          F.col("bvb"))
+             .sortWithinPartitions("band", "bvb", "bv")
+             .write.partitionBy("band", "bvb").mode("append")
+             .parquet(os.path.join(path, _BANDS)))
+        finally:
+            if pool is not None:
+                pool.shutdown(wait=True)
         if fut is not None:
-            try:
-                fut.result()
-            finally:
-                pool.shutdown()
+            fut.result()
         sc.setJobDescription(None)
         for f in (sh_d, bands_d, cand):
             f.unpersist()
@@ -448,160 +456,37 @@ def compact_band_index(spark: SparkSession, path: str) -> None:
     (band, bvb) partition — restoring the single-file in-file sort
     that makes the probe's pushed ``bv IN (...)`` row-group skipping
     tight — and fold the pairs dir the same way. Content-identical by
-    construction (a pure re-layout: same rows, re-sorted), staged
-    into a PROCESS-UNIQUE sibling directory and swapped in with
-    renames under an exclusive pid-stamped lock (ADVICE r15: fixed
-    staging names let two concurrent compactions rmtree each other's
-    staging and interleave the renames into a broken layout); a crash
-    mid-swap is recovered by ``recover_interrupted_compaction`` (the
-    ivf rebuild_ivf_index discipline — os.rename pairs cannot swap
-    directories atomically), which the probe side (``absorb_delta``/
-    ``absorb_hamming_delta``/``stored_pairs``) also calls, so a
-    stranded layout self-heals on the next read instead of waiting
-    for a maintenance pass. Value-preservation, file-count reduction,
-    and absorb-after-compaction correctness are locked by
-    tests/test_dedup_delta.py."""
+    construction (a pure re-layout: same rows, re-sorted), staged and
+    swapped in as one group by sources/swap.py under the index's
+    writer lock: a crash anywhere leaves the old or the new layout,
+    settled by the next read (``absorb_delta``/``absorb_hamming_delta``/
+    ``stored_pairs`` call ``swap.recover``). Value-preservation,
+    file-count reduction, and absorb-after-compaction correctness are
+    locked by tests/test_dedup_delta.py."""
     import shutil
-    import uuid
 
-    with _compact_lock(path):
-        recover_interrupted_compaction(path)
+    with swap.owner(path):
         bands_dir = os.path.join(path, _BANDS)
-        pairs_dir = os.path.join(path, _PAIRS)
-        staging = f"{path}__compact_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        os.makedirs(staging)
-        try:
-            bands_all = spark.read.parquet(bands_dir)
-            (bands_all
-             .repartition(_fanout_parts(bands_all),
-                          F.col("band"), F.col("bvb"))
-             .sortWithinPartitions("band", "bvb", "bv")
-             .write.partitionBy("band", "bvb").mode("overwrite")
-             .parquet(os.path.join(staging, _BANDS)))
-            (spark.read.parquet(pairs_dir).coalesce(1)
-             .write.mode("overwrite").parquet(os.path.join(staging, _PAIRS)))
-            # carry in-dir metadata (the embedding tier's geometry
-            # params live inside the bands dir — see _eparams_path)
-            # across the rewrite: Spark's overwrite only writes data
-            # files, and losing the params would strand the index
-            for fname in os.listdir(bands_dir):
-                if fname.startswith("_") and fname.endswith(".json"):
-                    shutil.copy2(os.path.join(bands_dir, fname),
-                                 os.path.join(staging, _BANDS, fname))
-            # the swap itself keeps the FIXED __old name: recovery must
-            # find it without knowing which process crashed, and the
-            # lock serializes every writer of it
-            old = f"{path}__old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.makedirs(old)
-            os.rename(bands_dir, os.path.join(old, _BANDS))
-            os.rename(pairs_dir, os.path.join(old, _PAIRS))
-            os.rename(os.path.join(staging, _BANDS), bands_dir)
-            os.rename(os.path.join(staging, _PAIRS), pairs_dir)
-            shutil.rmtree(old, ignore_errors=True)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-
-
-def _lock_owner_alive(lock_path: str) -> bool:
-    """True iff the pid stamped in a lock sentinel belongs to a LIVE
-    process. Errno-precise (ADVICE r16): ``os.kill(pid, 0)`` raises
-    PermissionError (EPERM) for a live process owned by another user
-    — that is ALIVE, not dead; only ESRCH (ProcessLookupError) means
-    the owner is gone. An unreadable/empty sentinel counts as dead
-    (the writer crashed between O_EXCL create and the pid write)."""
-    try:
-        with open(lock_path) as fh:
-            owner = int(fh.read().strip() or "0")
-        if owner <= 0:
-            return False
-        os.kill(owner, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # EPERM: live process, different user
-    except (OSError, ValueError):
-        return False
-
-
-class _compact_lock:
-    """Exclusive per-index compaction lock: O_CREAT|O_EXCL sentinel
-    holding the owner pid. A lock whose owner is DEAD (crashed
-    compaction — the staging/old dirs it left are cleaned by
-    recover + unique staging names) is stolen; a live owner raises,
-    serializing concurrent compactions instead of corrupting the
-    four-rename swap."""
-
-    def __init__(self, path: str):
-        self.lock = f"{path}__compact.lock"
-
-    def __enter__(self):
-        for _ in range(2):
-            try:
-                fd = os.open(self.lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(os.getpid()).encode())
-                os.close(fd)
-                return self
-            except FileExistsError:
-                if not _lock_owner_alive(self.lock):
-                    # dead/unreadable owner: steal and retry once
-                    try:
-                        os.unlink(self.lock)
-                    except OSError:
-                        pass
-                    continue
-                raise RuntimeError(
-                    f"compaction of {self.lock[:-len('__compact.lock')]!r} "
-                    "already in flight — retry after it finishes")
-        raise RuntimeError(f"could not acquire {self.lock}")
-
-    def __exit__(self, *exc):
-        try:
-            os.unlink(self.lock)
-        except OSError:
-            pass
-        return False
-
-
-def recover_interrupted_compaction(path: str) -> bool:
-    """Restore a band index stranded mid-swap by a compaction crash:
-    if either data dir is missing and ``path__old`` holds it, move it
-    back (never clobbering a dir that exists — a leftover ``__old``
-    beside a complete index means the swap finished).
-
-    Runs from every READ path, so it must tolerate a LIVE compaction
-    and concurrent recoverers (ADVICE r16): when the compaction lock
-    exists with a live owner the apparent mid-swap state is an
-    in-flight swap, not a crash — skip rather than yank ``__old``
-    back out from under the compactor. A rename lost to a racing
-    recoverer is absorbed by re-checking the layout instead of
-    propagating."""
-    lock = f"{path}__compact.lock"
-    if os.path.exists(lock) and _lock_owner_alive(lock):
-        try:
-            with open(lock) as fh:
-                owner = int(fh.read().strip() or "0")
-        except (OSError, ValueError):
-            owner = 0
-        if owner != os.getpid():  # our own held lock: proceed
-            return False
-    old = f"{path}__old"
-    restored = False
-    for sub in (_BANDS, _PAIRS):
-        live = os.path.join(path, sub)
-        saved = os.path.join(old, sub)
-        if not os.path.exists(live) and os.path.isdir(saved):
-            try:
-                os.rename(saved, live)
-                restored = True
-            except OSError:
-                # a concurrent recoverer won the rename (or restored
-                # live first): only re-raise if the live dir is still
-                # missing — then the layout is genuinely broken
-                if not os.path.exists(live):
-                    raise
-    return restored
+        staging = swap.staging_path(path)
+        bands_all = spark.read.parquet(bands_dir)
+        (bands_all
+         .repartition(_fanout_parts(bands_all),
+                      F.col("band"), F.col("bvb"))
+         .sortWithinPartitions("band", "bvb", "bv")
+         .write.partitionBy("band", "bvb").mode("overwrite")
+         .parquet(os.path.join(staging, _BANDS)))
+        (spark.read.parquet(os.path.join(path, _PAIRS)).coalesce(1)
+         .write.mode("overwrite").parquet(os.path.join(staging, _PAIRS)))
+        # carry in-dir metadata (the embedding tier's geometry
+        # params live inside the bands dir — see _eparams_path)
+        # across the rewrite: Spark's overwrite only writes data
+        # files, and losing the params would strand the index
+        for fname in os.listdir(bands_dir):
+            if fname.startswith("_") and fname.endswith(".json"):
+                shutil.copy2(os.path.join(bands_dir, fname),
+                             os.path.join(staging, _BANDS, fname))
+        swap.swap(path, {d: os.path.join(staging, d)
+                         for d in (_BANDS, _PAIRS)})
 
 
 # ---------------------------------------------------------------------------
@@ -676,7 +561,7 @@ def absorb_hamming_delta(spark: SparkSession, delta_sig: DataFrame,
     is per-pair. No corpus access anywhere: signature words ride the
     band rows on BOTH sides. Same size-gated planning-literal probe /
     distributed-join fallback, same add-only appends."""
-    recover_interrupted_compaction(path)
+    swap.recover(path)
     with open(os.path.join(path, _HPARAMS)) as fh:
         p = json.load(fh)
     if p["bv_buckets"] != BV_BUCKETS:
@@ -783,8 +668,8 @@ _EPARAMS = "_embedding_index_params.json"
 def _eparams_path(path: str) -> str:
     """The embedding tier's geometry params live INSIDE the bands
     directory (Spark's parquet listing ignores ``_``-prefixed files),
-    so the single ``os.rename`` that installs a rebanded bands dir
-    installs its params in the same atomic step — bands and params
+    so the one rename that installs a rebanded bands dir installs
+    its params in the same atomic step — bands and params
     can never be observed mismatched, no matter where a re-band
     crashes (ADVICE r16: the old root-level params file was replaced
     AFTER the dir swap, so a crash in the window left new-geometry
@@ -881,7 +766,7 @@ def absorb_embedding_delta(spark: SparkSession, indexed_emb: DataFrame,
     candidate-sized), never for signatures. Same size-gated
     planning-literal probe / distributed-join fallback, same add-only
     appends, same ``id !=`` redelivery guard as the other tiers."""
-    recover_interrupted_compaction(path)
+    swap.recover(path)
     p = _read_eparams(path)
     if p["bv_buckets"] != BV_BUCKETS:
         raise ValueError(f"index at {path} written with {p}, "
@@ -1031,48 +916,25 @@ def reband_embedding_index(spark: SparkSession, emb: DataFrame,
                            path: str) -> None:
     """The re-band pass ``embedding_index_health`` recommends: a full
     rebuild at the CURRENT corpus size's adaptive geometry (fresh
-    band width + band count, fresh single-shot pair set), staged into
-    a process-unique sibling and swapped in under the compaction lock
-    with the same __old rename discipline — a crash mid-swap recovers
-    via ``recover_interrupted_compaction`` on the next read. This is
-    the IVF staged atomic-swap retrain applied to the band-geometry
-    axis; cost = one single-shot run, paid only when the corpus has
-    outgrown its geometry (~each time n grows ~2^REBAND_BITS_DRIFT×)."""
-    import shutil
-    import uuid
-
-    p = _read_eparams(path)
-    with _compact_lock(path):
-        recover_interrupted_compaction(path)
-        staging = f"{path}__reband_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        os.makedirs(staging)
-        try:
-            write_embedding_index(emb, staging, p["threshold"],
-                                  seed=p["seed"])
-            old = f"{path}__old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.makedirs(old)
-            # the new params ride INSIDE staging/bands (_eparams_path),
-            # so the bands rename below installs geometry and band rows
-            # in one atomic step — a crash anywhere in this sequence
-            # leaves either the old index (recoverable from __old) or
-            # the new one, never new bands with old params (ADVICE r16)
-            os.rename(os.path.join(path, _BANDS), os.path.join(old, _BANDS))
-            os.rename(os.path.join(path, _PAIRS), os.path.join(old, _PAIRS))
-            os.rename(os.path.join(staging, _BANDS),
-                      os.path.join(path, _BANDS))
-            os.rename(os.path.join(staging, _PAIRS),
-                      os.path.join(path, _PAIRS))
-            # drop a stale pre-r17 root-level params file so the
-            # legacy fallback in _read_eparams can never shadow the
-            # in-bands copy
-            try:
-                os.unlink(os.path.join(path, _EPARAMS))
-            except OSError:
-                pass
-            shutil.rmtree(old, ignore_errors=True)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+    band width + band count, fresh single-shot pair set), staged and
+    swapped in as one group by sources/swap.py under the index's
+    writer lock — a crash anywhere leaves the old or the new index,
+    settled by the next read. The new params ride INSIDE the staged
+    bands dir (_eparams_path), so geometry and band rows install
+    together; the swap also drops a stale pre-r17 root-level params
+    file, so the legacy fallback in _read_eparams can never shadow
+    the in-bands copy. This is the IVF staged retrain applied to the
+    band-geometry axis; cost = one single-shot run, paid only when
+    the corpus has outgrown its geometry (~each time n grows
+    ~2^REBAND_BITS_DRIFT×)."""
+    with swap.owner(path):
+        p = _read_eparams(path)
+        staging = swap.staging_path(path)
+        write_embedding_index(emb, staging, p["threshold"],
+                              seed=p["seed"])
+        swap.swap(path, {_BANDS: os.path.join(staging, _BANDS),
+                         _PAIRS: os.path.join(staging, _PAIRS),
+                         _EPARAMS: None})
 
 
 # ---------------------------------------------------------------------------
@@ -1207,11 +1069,10 @@ def write_semantic_index(emb: DataFrame, path: str, threshold: float,
      .write.mode("overwrite")
      .parquet(os.path.join(path, _SEM_VERDICTS, "epoch=0")))
     # params ride INSIDE the assign dir and a matching build tag
-    # INSIDE the verdicts dir, so a retrain's two dir renames can be
-    # crash-audited: geometry and membership install atomically
-    # together, and recover_semantic_retrain detects a verdicts dir
-    # from a different build (the embedding tier's params-travel-with-
-    # bands fix, ADVICE r16, applied here from day one)
+    # INSIDE the verdicts dir: geometry and membership travel with the
+    # dirs a retrain swaps, and the tag lets a reader check that
+    # assign and verdicts come from one build (the tests check it
+    # after every injected retrain crash)
     tag = _uuid.uuid4().hex
     tmp = os.path.join(path, _SEM_ASSIGN, f".params.tmp{os.getpid()}")
     with open(tmp, "w") as fh:
@@ -1247,7 +1108,7 @@ def absorb_semantic_delta(spark: SparkSession, corpus: DataFrame,
     from last_minute_legends_spark.functions.vectors import cosine
     from last_minute_legends_spark.operators.similarity import with_bucket
 
-    recover_semantic_retrain(path)
+    swap.recover(path)
     with open(os.path.join(path, _SEM_ASSIGN, _SEM_PARAMS)) as fh:
         p = _json.load(fh)
     rows = [(int(i), [float(x) for x in v], float(n))
@@ -1306,41 +1167,6 @@ def _sem_read_params(path: str) -> dict:
         return _json.load(fh)
 
 
-def _sem_consistent(path: str) -> bool:
-    """True iff the assign dir's params and the verdicts dir's build
-    tag agree — the invariant a crash mid-retrain can break."""
-    try:
-        p = _sem_read_params(path)
-        with open(os.path.join(path, _SEM_VERDICTS, "_SEM_TAG")) as fh:
-            return fh.read().strip() == p["tag"]
-    except (OSError, KeyError, ValueError):
-        return False
-
-
-def recover_semantic_retrain(path: str) -> bool:
-    """Crash recovery for an interrupted semantic-index retrain,
-    called from every read path: if a ``__old_sem`` sibling exists
-    and the live dirs are inconsistent (missing, or assign and
-    verdicts carry different build tags), restore the old store
-    whole; if the live dirs are consistent, the swap completed — drop
-    the leftover. Returns True when it restored."""
-    import shutil
-
-    old = f"{path}__old_sem"
-    if not os.path.isdir(old):
-        return False
-    if _sem_consistent(path):
-        shutil.rmtree(old, ignore_errors=True)
-        return False
-    for d in (_SEM_ASSIGN, _SEM_VERDICTS):
-        src = os.path.join(old, d)
-        if os.path.isdir(src):
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-            os.rename(src, os.path.join(path, d))
-    shutil.rmtree(old, ignore_errors=True)
-    return True
-
-
 def semantic_index_health(spark: SparkSession, path: str) -> dict:
     """Geometry-drift trigger for the semantic index: the frozen
     k-means model was sized for the corpus at build time
@@ -1373,46 +1199,27 @@ def retrain_semantic_index(spark: SparkSession, emb: DataFrame,
                            path: str) -> None:
     """The retrain pass ``semantic_index_health`` recommends: a full
     rebuild at the CURRENT population's adaptive geometry (fresh k,
-    bounded training sample, fresh membership + verdicts), staged
-    into a process-unique sibling and swapped in under the compaction
-    lock — both live dirs move to ``__old_sem`` first, the staged
-    dirs rename in, and a crash anywhere leaves either a consistent
-    old store (restored by recover_semantic_retrain via the build-tag
-    audit) or the consistent new one. The IVF staged atomic-swap
-    retrain applied to the dedup axis; paid only when the corpus has
-    outgrown its clusters ~4x."""
-    import shutil
-    import uuid as _uuid
-
+    bounded training sample, fresh membership + verdicts), staged and
+    swapped in as one group by sources/swap.py under the index's
+    writer lock — a crash anywhere leaves the consistent old store or
+    the consistent new one (same build tag in assign and verdicts),
+    settled by the next read. The IVF staged retrain applied to the
+    dedup axis; paid only when the corpus has outgrown its clusters
+    ~4x."""
     from last_minute_legends_spark.functions.portable_hash import md5_id_hash
     from last_minute_legends_spark.operators.similarity import (
         semantic_scaled_params,
     )
 
-    p = _sem_read_params(path)
-    with _compact_lock(path):
-        recover_semantic_retrain(path)
-        staging = f"{path}__retrain_{os.getpid()}_{_uuid.uuid4().hex[:8]}"
-        os.makedirs(staging)
-        try:
-            n = emb.count()
-            k, mod = semantic_scaled_params(int(n))
-            write_semantic_index(
-                emb, staging, float(p["threshold"]), k=k,
-                iters=int(p["iters"]),
-                id_hash=md5_id_hash if p.get("id_hash") == "md5" else None,
-                sample_mod=mod, use_np=bool(p.get("use_np")))
-            old = f"{path}__old_sem"
-            shutil.rmtree(old, ignore_errors=True)
-            os.makedirs(old)
-            os.rename(os.path.join(path, _SEM_ASSIGN),
-                      os.path.join(old, _SEM_ASSIGN))
-            os.rename(os.path.join(path, _SEM_VERDICTS),
-                      os.path.join(old, _SEM_VERDICTS))
-            os.rename(os.path.join(staging, _SEM_ASSIGN),
-                      os.path.join(path, _SEM_ASSIGN))
-            os.rename(os.path.join(staging, _SEM_VERDICTS),
-                      os.path.join(path, _SEM_VERDICTS))
-            shutil.rmtree(old, ignore_errors=True)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+    with swap.owner(path):
+        p = _sem_read_params(path)
+        staging = swap.staging_path(path)
+        n = emb.count()
+        k, mod = semantic_scaled_params(int(n))
+        write_semantic_index(
+            emb, staging, float(p["threshold"]), k=k,
+            iters=int(p["iters"]),
+            id_hash=md5_id_hash if p.get("id_hash") == "md5" else None,
+            sample_mod=mod, use_np=bool(p.get("use_np")))
+        swap.swap(path, {d: os.path.join(staging, d)
+                         for d in (_SEM_ASSIGN, _SEM_VERDICTS)})

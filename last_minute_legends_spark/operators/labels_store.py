@@ -19,33 +19,36 @@ keys, and every destination label is the min over merged old labels
 directories that can gain, lose, or change a row is exactly
 ``buckets(merge-map keys)`` — bounded by the epoch, not the corpus —
 and the rewrite touches only those directories (planning-time
-``lbk IN (...)`` partition pruning on the read, per-directory rename
-swap on the write; untouched bucket files keep byte identity,
-test-locked). Bucketing by cluster_id (not id) is what makes this
-work: when two clusters merge, every member row of the losing
-cluster must change, and those rows are CO-LOCATED in the losing
+``lbk IN (...)`` partition pruning on the read, a swap of just the
+touched directories on the write; untouched bucket files keep byte
+identity, test-locked). Bucketing by cluster_id (not id) is what
+makes this work: when two clusters merge, every member row of the
+losing cluster must change, and those rows are CO-LOCATED in the losing
 label's bucket — bucketed by id they would be spread across every
 bucket and any merge would touch the whole table.
 
-Crash/redelivery story (matches the band-index discipline):
-- the per-bucket swap renames the live dir to ``<dir>__old`` before
-  installing the staged replacement; ``recover_labels_store`` (called
-  from every read path) restores a dir stranded mid-swap;
-- a fold interrupted mid-swap leaves SOME buckets pre-merge and some
-  post-merge — consistent under re-fold, because the merge is
-  confluent: re-running the same epoch maps already-merged edges to
-  la == lb no-ops and re-derives exactly the outstanding merges
-  (locked by the redelivery test in tests/test_labels_store.py).
+Crash/redelivery story: a fold's touched buckets are replaced as ONE
+group by sources/swap.py under the store's writer lock, and every
+read path calls ``swap.recover`` — a fold that crashes anywhere
+leaves the store all-pre-fold or all-post-fold, never some buckets of
+each. That is what makes redelivery safe: a mixed state could lose
+rows for good (the rows of a cluster whose old bucket was already
+rewritten while its destination bucket was not), and re-folding the
+same edges cannot bring them back. From a whole state, re-folding the
+same epoch maps already-merged edges to la == lb no-ops and
+re-derives exactly the outstanding merges (locked by the redelivery
+and crash tests in tests/test_labels_store.py).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from last_minute_legends_spark.sources import swap
 
 _LABELS = "labels"
 _LPARAMS = "_labels_store_params.json"
@@ -139,107 +142,9 @@ def _store_df(spark: SparkSession, path: str, params: dict) -> DataFrame:
 
 def read_labels_store(spark: SparkSession, path: str) -> DataFrame:
     """(id, cluster_id) over the whole store."""
-    recover_labels_store(path)
+    swap.recover(os.path.join(path, _LABELS))
     return (_store_df(spark, path, _read_params(path))
             .select("id", "cluster_id"))
-
-
-def recover_labels_store(path: str) -> bool:
-    """Restore bucket dirs stranded mid-swap by a crashed fold: a
-    ``lbk=<b>__old`` beside a MISSING live dir moves back; beside a
-    present live dir the swap finished — drop the leftover.
-
-    Runs from every read path, so (the band-index lesson, ADVICE r16)
-    it must tolerate a LIVE fold: when the store's merge lock names a
-    live foreign owner, the apparent mid-swap state is an in-flight
-    swap — skip rather than yank ``__old`` back out from under it."""
-    from last_minute_legends_spark.operators.dedup_delta import (
-        _lock_owner_alive,
-    )
-
-    lock = f"{path}__merge.lock"
-    if os.path.exists(lock) and _lock_owner_alive(lock):
-        try:
-            with open(lock) as fh:
-                owner = int(fh.read().strip() or "0")
-        except (OSError, ValueError):
-            owner = 0
-        if owner != os.getpid():
-            return False
-    root = os.path.join(path, _LABELS)
-    if not os.path.isdir(root):
-        return False
-    # a crashed fold's process-unique staging dir is dead weight once
-    # its owner pid is gone — sweep it so orphans don't accumulate
-    for name in os.listdir(path):
-        if "__merge_staged_" in name:
-            try:
-                pid = int(name.rsplit("_", 1)[-1])
-                os.kill(pid, 0)
-            except (ValueError, ProcessLookupError):
-                shutil.rmtree(os.path.join(path, name),
-                              ignore_errors=True)
-            except OSError:
-                pass  # EPERM: live foreign owner — leave it
-    restored = False
-    for name in os.listdir(root):
-        if not name.endswith("__old"):
-            continue
-        live = os.path.join(root, name[:-len("__old")])
-        saved = os.path.join(root, name)
-        if not os.path.exists(live):
-            try:
-                os.rename(saved, live)
-                restored = True
-            except OSError:
-                if not os.path.exists(live):
-                    raise
-        else:
-            shutil.rmtree(saved, ignore_errors=True)
-    return restored
-
-
-class _merge_lock:
-    """Exclusive per-store fold lock (the dedup_delta._compact_lock
-    sentinel with errno-precise liveness — EPERM is a LIVE foreign
-    owner, only ESRCH steals): two concurrent write-folds would
-    interleave their per-bucket swaps into a half-A-half-B labeling,
-    so writers serialize; readers consult the lock in
-    recover_labels_store instead of taking it."""
-
-    def __init__(self, path: str):
-        self.lock = f"{path}__merge.lock"
-
-    def __enter__(self):
-        from last_minute_legends_spark.operators.dedup_delta import (
-            _lock_owner_alive,
-        )
-
-        for _ in range(2):
-            try:
-                fd = os.open(self.lock,
-                             os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(os.getpid()).encode())
-                os.close(fd)
-                return self
-            except FileExistsError:
-                if not _lock_owner_alive(self.lock):
-                    try:
-                        os.unlink(self.lock)
-                    except OSError:
-                        pass
-                    continue
-                raise RuntimeError(
-                    f"label fold on {self.lock[:-len('__merge.lock')]!r} "
-                    "already in flight — retry after it finishes")
-        raise RuntimeError(f"could not acquire {self.lock}")
-
-    def __exit__(self, *exc):
-        try:
-            os.unlink(self.lock)
-        except OSError:
-            pass
-        return False
 
 
 def merge_labels_store(spark: SparkSession, path: str,
@@ -259,7 +164,7 @@ def merge_labels_store(spark: SparkSession, path: str,
     - rewrite (``write=True``): ONLY the bucket directories holding a
       merge-map key are read (planning-time ``lbk IN (...)`` — Spark
       prunes the other partitions off the listing), remapped through
-      the broadcast map, and swapped in per-directory; every other
+      the broadcast map, and swapped in as one group; every other
       bucket file is untouched byte-for-byte. New nodes insert into
       their destination label's bucket, which is always a touched
       bucket (destination labels are merge-map keys).
@@ -270,20 +175,20 @@ def merge_labels_store(spark: SparkSession, path: str,
 
     A no-op epoch (every edge already intra-cluster, every node
     already labeled) touches ZERO buckets. Write-folds hold the
-    store's merge lock for their whole duration (lookup → contracted
-    CC → swap): interleaved per-bucket swaps from two concurrent
-    folds would leave a half-A-half-B labeling, and fold SEMANTICS
-    require serialization anyway (each fold's merge map is computed
-    against the labeling it rewrites)."""
+    store's writer lock (``swap.owner``) for their whole duration
+    (lookup → contracted CC → swap): fold SEMANTICS require
+    serialization (each fold's merge map is computed against the
+    labeling it rewrites), so a second concurrent fold raises
+    ``swap.SwapInFlight``."""
     if write:
-        with _merge_lock(path):
+        with swap.owner(os.path.join(path, _LABELS)):
             return _merge_impl(spark, path, new_edges, write=True)
     return _merge_impl(spark, path, new_edges, write=False)
 
 
 def _merge_impl(spark: SparkSession, path: str, new_edges: DataFrame,
                 write: bool) -> DataFrame:
-    recover_labels_store(path)
+    swap.recover(os.path.join(path, _LABELS))
     params = _read_params(path)
 
     # size-gated LOCAL fold (r18, VERDICT r17 #1/#2): an epoch's edge
@@ -292,8 +197,10 @@ def _merge_impl(spark: SparkSession, path: str, new_edges: DataFrame,
     # the contracted-graph fold with driver-side union-find instead of
     # 5-6 scheduled jobs of persist + iterative-CC checkpoint/count/
     # collect + touched-collect. Identical labels: same min-label
-    # semantics (locked by tests/test_labels_store.py, which runs both
-    # paths). Larger epochs keep the distributed path below.
+    # semantics. Larger epochs keep the distributed path below; the
+    # value-contract and crash tests in tests/test_labels_store.py run
+    # both paths by patching operators.dedup.LOCAL_EDGES_MAX to 0,
+    # which is read here at call time.
     from last_minute_legends_spark.operators.dedup import LOCAL_EDGES_MAX
 
     rows = (new_edges.select("doc_a", "doc_b")
@@ -488,32 +395,23 @@ def _merge_distributed(spark: SparkSession, path: str, params: dict,
 
 def _stage_and_swap(spark: SparkSession, root: str, updated: DataFrame,
                     touched: list, n_buckets: int) -> None:
-    """Stage ONLY the touched buckets, then swap each directory in.
-    Every updated row's destination bucket is itself touched (see
-    module docstring), so the complement partitions need no staging
-    and keep byte identity."""
-    staging = f"{root}__merge_staged_{os.getpid()}"
-    shutil.rmtree(staging, ignore_errors=True)
+    """Stage ONLY the touched buckets, then swap them in as one group
+    (sources/swap.py; the caller holds the writer lock). Every updated
+    row's destination bucket is itself touched (see module
+    docstring), so the complement partitions need no staging and keep
+    byte identity. A bucket can legitimately empty out (all its
+    clusters merged into other buckets): no staged dir, and the swap
+    deletes it."""
+    staging = swap.staging_path(root)
     n_write = min(spark.sparkContext.defaultParallelism, n_buckets)
     (updated.withColumn("lbk", _lbk(F.col("cluster_id"), n_buckets))
      .repartition(n_write, F.col("lbk"))
      .sortWithinPartitions("lbk", "id")
      .write.partitionBy("lbk").mode("overwrite").parquet(staging))
-    try:
-        for b in touched:
-            live = os.path.join(root, f"lbk={b}")
-            src = os.path.join(staging, f"lbk={b}")
-            old = f"{live}__old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(live):
-                os.rename(live, old)
-            if os.path.exists(src):
-                os.rename(src, live)
-            # a bucket can legitimately empty out (all its clusters
-            # merged into other buckets): no staged dir → live stays
-            # absent
-            shutil.rmtree(old, ignore_errors=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    entries = {}
+    for b in touched:
+        src = os.path.join(staging, f"lbk={b}")
+        entries[f"lbk={b}"] = src if os.path.exists(src) else None
+    swap.swap(root, entries)
     # refresh: the swap changed files under the read path
     spark.catalog.refreshByPath(root)

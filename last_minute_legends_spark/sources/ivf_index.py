@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from last_minute_legends_spark.functions.vectors import cosine
 from last_minute_legends_spark.operators.similarity import assign_buckets
+from last_minute_legends_spark.sources import swap
 
 _DATA = "data"
 _CENTROIDS = "centroids"
@@ -156,44 +157,17 @@ def index_health(spark: SparkSession, path: str) -> dict:
     }
 
 
-def recover_interrupted_rebuild(path: str) -> bool:
-    """Crash recovery for ``rebuild_ivf_index``'s two-rename swap.
-
-    os.rename pairs cannot swap two directories atomically, so there
-    is an unavoidable window (after ``rename(path, path__old)``,
-    before ``rename(staging, path)``) where nothing serves at
-    ``path``; a crash there strands the fully-intact original at
-    ``path__old``. This restores it: when ``path`` is missing but
-    ``path__old`` exists, rename it back and return True. A no-op
-    (False) when ``path`` exists — a leftover ``__old`` beside a
-    live index means the swap COMPLETED and the stale copy just
-    wasn't deleted yet, so it must not be restored over the rebuilt
-    index. ``rebuild_ivf_index`` and ``probe_topk`` both call this,
-    so an interrupted rebuild self-heals on the next maintenance or
-    probe touch (ADVICE r14)."""
-    old = f"{path}__old"
-    if not os.path.exists(path) and os.path.isdir(old):
-        os.rename(old, path)
-        return True
-    return False
-
-
 def rebuild_ivf_index(spark: SparkSession, path: str,
                       k: int | None = None, iters: int = 3) -> None:
     """The maintenance pass ``index_health`` recommends: read every
     vector out of the index (base + all appended files), train FRESH
     centroids over the full current population, write the re-leveled
-    index to a staging directory, then swap it in with directory
-    renames — the old layout serves probes until the final rename
-    pair (the merge_day_partitioned stage-then-swap discipline).
-
-    Crash-safety, stated precisely: a crash before ``rename(path,
-    path__old)`` leaves the original serving and only staging litter
-    behind; a crash between the two renames leaves the original
-    INTACT BUT NOT SERVING, at ``path__old`` (os.rename pairs cannot
-    swap directories atomically — probes in that window fail).
-    ``recover_interrupted_rebuild`` — run here first, and by
-    ``probe_topk`` on a missing index — restores it mechanically.
+    index to a staging directory, then swap its data, centroids and
+    meta in as one group (sources/swap.py) — the old layout serves
+    probes until the swap. The whole pass holds the index's writer
+    lock, so two rebuilds cannot interleave; a crash anywhere leaves
+    the old or the new index, settled by the next rebuild or probe
+    (``probe_topk`` calls ``swap.recover``).
 
     ``k`` defaults to the existing model's centroid count; pass the
     adaptive k ≈ n/TARGET_BUCKET_ROWS when the index has grown enough
@@ -202,26 +176,20 @@ def rebuild_ivf_index(spark: SparkSession, path: str,
     r14: drifted appends skew bucket growth and dent recall; after a
     rebuild the health stats return to baseline and recall to the
     fresh-index level (tested)."""
-    import shutil
-
     from last_minute_legends_spark.operators.similarity import (
         train_centroids,
     )
 
-    recover_interrupted_rebuild(path)
-    data = spark.read.parquet(os.path.join(path, _DATA)).select(
-        "id", "v", "nrm")
-    if k is None:
-        k = spark.read.parquet(os.path.join(path, _CENTROIDS)).count()
-    centroids = train_centroids(data, k=k, iters=iters)
-    staging = f"{path}__rebuild"
-    shutil.rmtree(staging, ignore_errors=True)
-    write_ivf_index(data, centroids, staging)
-    old = f"{path}__old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
+    with swap.owner(path):
+        data = spark.read.parquet(os.path.join(path, _DATA)).select(
+            "id", "v", "nrm")
+        if k is None:
+            k = spark.read.parquet(os.path.join(path, _CENTROIDS)).count()
+        centroids = train_centroids(data, k=k, iters=iters)
+        staging = swap.staging_path(path)
+        write_ivf_index(data, centroids, staging)
+        swap.swap(path, {d: os.path.join(staging, d)
+                         for d in (_DATA, _CENTROIDS, _META)})
 
 
 # Above this many queries the probe falls back to the distributed
@@ -257,7 +225,7 @@ def probe_topk(spark: SparkSession, path: str, queries: DataFrame,
     ordinary distributed join. At that query volume most buckets are
     probed anyway, so the lost pruning is worth ~nothing and the
     driver stays out of the data path entirely."""
-    recover_interrupted_rebuild(path)
+    swap.recover(path)
     cent = spark.read.parquet(os.path.join(path, _CENTROIDS)).select(
         F.col("id").alias("cent_id"), F.col("v").alias("cv"),
         F.col("nrm").alias("cn"))

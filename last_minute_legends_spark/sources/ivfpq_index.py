@@ -128,8 +128,18 @@ def _decode_codes(spark: SparkSession, path: str,
             nrows = len(pdf)
             R = np.empty((nrows, dim), dtype=np.float64)
             for i, (cids, C) in enumerate(cb_np):
-                R[:, i * d_sub:(i + 1) * d_sub] = \
-                    C[np.searchsorted(cids, codes[:, i])]
+                # searchsorted returns an insertion point, not a match:
+                # a code id missing from the codebook would silently
+                # decode as its neighbouring codeword
+                idx = np.minimum(np.searchsorted(cids, codes[:, i]),
+                                 len(cids) - 1)
+                bad = cids[idx] != codes[:, i]
+                if bad.any():
+                    raise ValueError(
+                        f"IVF-PQ index corruption at {path}: code id "
+                        f"{int(codes[bad, i][0])} of subspace {i} is not "
+                        "in its codebook")
+                R[:, i * d_sub:(i + 1) * d_sub] = C[idx]
             acc = np.zeros(nrows)
             for j in range(dim):
                 acc = acc + R[:, j] * R[:, j]

@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from last_minute_legends_spark.sources import swap
+
 DAY_US = 86_400_000_000
 _PART = "event_day_us"
 
@@ -44,6 +46,7 @@ def list_days(path: str) -> list[int]:
     so they are not a day partition and are skipped here (a day-range
     read never selects them; the oracle's ``day_us >= lo`` comparison
     excludes NULL days the same way)."""
+    swap.recover(path)
     days = []
     for d in os.listdir(path):
         if not d.startswith(f"{_PART}="):
@@ -59,6 +62,7 @@ def read_day_range(spark: SparkSession, path: str, lo_us: int,
                    hi_us: int | None = None) -> DataFrame:
     """Events with day partition in [lo_us, hi_us] — literal bounds,
     so the filter is a planning-time PartitionFilter, never a scan."""
+    swap.recover(path)
     df = spark.read.parquet(path).filter(F.col(_PART) >= F.lit(lo_us))
     if hi_us is not None:
         df = df.filter(F.col(_PART) <= F.lit(hi_us))
@@ -116,30 +120,30 @@ def merge_day_partitioned(spark: SparkSession, path: str,
     read with a planning-time ``event_day_us IN (...)`` partition
     filter (the untouched 99.x% of the table is never listed, opened,
     or read), the merged partitions are written to a staging
-    directory, and each touched day directory is swapped in as a
-    metadata move. Untouched partition files keep their identity —
-    asserted byte-for-byte in tests (only touched partitions
-    rewrite). ``changes`` must carry ``event_day_us``."""
-    import shutil
-
+    directory, and the touched day directories are swapped in as one
+    group of metadata moves (sources/swap.py, under the table's
+    writer lock): a crash anywhere leaves every touched day old or
+    every one new, settled by the next read. Untouched partition
+    files keep their identity — asserted byte-for-byte in tests (only
+    touched partitions rewrite). ``changes`` must carry
+    ``event_day_us``."""
     days = sorted(r[0] for r in
                   changes.select(_PART).distinct().collect()
                   if r[0] is not None)
     if not days:
         return []
-    base = spark.read.parquet(path).filter(F.col(_PART).isin(days))
-    merged = (base.join(changes.select(key).distinct(), key, "left_anti")
-              .unionByName(changes.select(*base.columns)))
-    staged = f"{path}_merge_staged"
-    shutil.rmtree(staged, ignore_errors=True)
-    merged.write.mode("overwrite").partitionBy(_PART).parquet(staged)
-    for d in days:
-        dst = os.path.join(path, f"{_PART}={d}")
-        src = os.path.join(staged, f"{_PART}={d}")
-        shutil.rmtree(dst, ignore_errors=True)
-        if os.path.exists(src):
-            shutil.move(src, dst)
-    shutil.rmtree(staged, ignore_errors=True)
+    with swap.owner(path):
+        base = spark.read.parquet(path).filter(F.col(_PART).isin(days))
+        merged = (base.join(changes.select(key).distinct(), key,
+                            "left_anti")
+                  .unionByName(changes.select(*base.columns)))
+        staged = swap.staging_path(path)
+        merged.write.mode("overwrite").partitionBy(_PART).parquet(staged)
+        entries = {}
+        for d in days:
+            src = os.path.join(staged, f"{_PART}={d}")
+            entries[f"{_PART}={d}"] = src if os.path.exists(src) else None
+        swap.swap(path, entries)
     return days
 
 
@@ -164,6 +168,7 @@ def compact_day_partitions(spark: SparkSession, path: str, out_path: str,
     """
     import math
 
+    swap.recover(path)
     quotas = []
     for d in os.listdir(path):
         if not d.startswith(f"{_PART}="):

@@ -25,7 +25,9 @@ from last_minute_legends_spark.operators.dedup_delta import (
     absorb_delta,
     write_band_index,
 )
+from last_minute_legends_spark.sources import swap
 from last_minute_legends_spark.sources.tables import Catalog
+from tests.swap_faults import Crash, crash_at, moving_in, moving_out
 
 THRESHOLD = 0.8
 
@@ -191,13 +193,14 @@ def test_band_index_compaction_lifecycle(spark, sf_dir, tmp_path):
     file per (band, bvb) partition with content IDENTICAL (band rows
     and stored pairs value-equal), and a subsequent absorb against
     the compacted index is still exactly right. Crash mid-swap
-    recovers via recover_interrupted_compaction."""
+    recovers via swap.recover."""
     import os as _os
+
+    import pytest
 
     from last_minute_legends_spark.operators.dedup_delta import (
         band_index_health,
         compact_band_index,
-        recover_interrupted_compaction,
         stored_pairs,
     )
 
@@ -228,11 +231,13 @@ def test_band_index_compaction_lifecycle(spark, sf_dir, tmp_path):
     out = _pairs(absorb_delta(spark, acc, parts[11], idx, THRESHOLD))
     assert out == _pairs(minhash_lsh_pairs(docs, THRESHOLD))
 
-    # crash window: bands dir renamed away, pairs still live
-    _os.makedirs(f"{idx}__old", exist_ok=True)
-    _os.rename(_os.path.join(idx, "bands"),
-               _os.path.join(f"{idx}__old", "bands"))
-    assert recover_interrupted_compaction(idx) is True
+    # crash window: bands dir renamed away, pairs still live — a
+    # compaction that crashed as it moved the pairs dir out
+    with crash_at(moving_out(_os.path.join(idx, "pairs"))), \
+            pytest.raises(Crash):
+        compact_band_index(spark, idx)
+    assert not _os.path.exists(_os.path.join(idx, "bands"))
+    assert swap.recover(idx) is True
     assert {tuple(r) for r in spark.read.parquet(
         _os.path.join(idx, "bands")).collect()} >= bands_before
 
@@ -374,7 +379,6 @@ def test_compaction_lock_serializes_and_steals_stale(spark, sf_dir,
     import pytest
 
     from last_minute_legends_spark.operators.dedup_delta import (
-        _compact_lock,
         compact_band_index,
         stored_pairs,
     )
@@ -384,16 +388,16 @@ def test_compaction_lock_serializes_and_steals_stale(spark, sf_dir,
     write_band_index(docs, idx, THRESHOLD)
     before = _pairs(stored_pairs(spark, idx))
 
-    with _compact_lock(idx):  # a live concurrent compaction
+    with swap.owner(idx):  # a live concurrent compaction
         with pytest.raises(RuntimeError, match="in flight"):
             compact_band_index(spark, idx)
 
     # stale lock: owner pid that cannot exist
-    with open(f"{idx}__compact.lock", "w") as fh:
+    with open(swap.lock_path(idx), "w") as fh:
         fh.write("999999999")
     compact_band_index(spark, idx)  # steals and proceeds
     assert _pairs(stored_pairs(spark, idx)) == before
-    assert not os.path.exists(f"{idx}__compact.lock")
+    assert not os.path.exists(swap.lock_path(idx))
 
 
 def test_probe_recovery_skips_live_compaction(tmp_path):
@@ -403,25 +407,81 @@ def test_probe_recovery_skips_live_compaction(tmp_path):
     is dead (crashed compaction)."""
     import subprocess
 
-    from last_minute_legends_spark.operators import dedup_delta as dd
+    import pytest
 
     path = str(tmp_path / "idx")
-    os.makedirs(path)
-    os.makedirs(os.path.join(f"{path}__old", "bands"))
+    for d in ("bands", "pairs"):
+        os.makedirs(os.path.join(path, d))
+    # compact_band_index's swap, crashed right after moving bands out
+    with crash_at(moving_out(os.path.join(path, "pairs"))), \
+            pytest.raises(Crash):
+        with swap.owner(path):
+            staging = swap.staging_path(path)
+            for d in ("bands", "pairs"):
+                os.makedirs(os.path.join(staging, d))
+            swap.swap(path, {d: os.path.join(staging, d)
+                             for d in ("bands", "pairs")})
+    saved = os.path.join(f"{path}__swap", "saved", "bands")
 
     proc = subprocess.Popen(["sleep", "60"])
     try:
-        with open(f"{path}__compact.lock", "w") as fh:
+        with open(swap.lock_path(path), "w") as fh:
             fh.write(str(proc.pid))
         # live owner: apparent mid-swap state is an in-flight swap
-        assert dd.recover_interrupted_compaction(path) is False
-        assert os.path.isdir(os.path.join(f"{path}__old", "bands"))
+        assert swap.recover(path) is False
+        assert os.path.isdir(saved)
     finally:
         proc.kill()
         proc.wait()
     # same lock file, owner now dead: recovery restores the layout
-    assert dd.recover_interrupted_compaction(path) is True
+    assert swap.recover(path) is True
     assert os.path.isdir(os.path.join(path, "bands"))
+
+
+def test_absorb_joins_post_pairs_when_band_append_fails(spark, tmp_path,
+                                                       monkeypatch):
+    """absorb_delta runs ``post_pairs`` on a worker thread beside the
+    band-rows append; when the append raises, the absorb must still
+    join the worker before the exception leaves it — a caller that
+    sees the error must never have a fold running behind its back."""
+    import time
+
+    import pytest
+
+    from last_minute_legends_spark.operators import dedup_delta as dd
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox {i % 3} jumps over the lazy dog")
+         for i in range(8)], "doc_id long, text string")
+    base = docs.filter(F.col("doc_id") < 4)
+    idx = str(tmp_path / "idx")
+    write_band_index(base, idx, THRESHOLD)
+
+    def failing_append(df):
+        raise RuntimeError("band append failed")
+
+    monkeypatch.setattr(dd, "_fanout_parts", failing_append)
+    returned = []
+
+    def slow_fold(new_pairs):
+        time.sleep(1.0)
+        returned.append(True)
+
+    with pytest.raises(RuntimeError, match="band append failed"):
+        absorb_delta(spark, base, docs.filter(F.col("doc_id") >= 4), idx,
+                     THRESHOLD, post_pairs=slow_fold)
+    assert returned == [True]
+
+
+def test_return_new_requires_append(spark, tmp_path):
+    """Only an appending absorb persists the epoch's new pairs, so
+    ``return_new=True`` with ``append=False`` is refused, not
+    ignored."""
+    import pytest
+
+    with pytest.raises(ValueError, match="return_new"):
+        absorb_delta(spark, None, None, str(tmp_path / "idx"),
+                     append=False, return_new=True)
 
 
 def test_embedding_params_travel_with_bands_dir(spark, sf_dir, tmp_path):
@@ -999,21 +1059,32 @@ def test_semantic_delta_chains_and_redelivery(spark, sf_dir, tmp_path):
     release_absorb_persists()
 
 
+def _sem_tags(idx: str) -> tuple[str, str]:
+    """The build tags of a semantic index's assign params and verdicts
+    dir — equal iff both dirs come from one build."""
+    import json as _json
+
+    with open(os.path.join(idx, "assign",
+                           "_semantic_index_params.json")) as fh:
+        tag = _json.load(fh)["tag"]
+    with open(os.path.join(idx, "verdicts", "_SEM_TAG")) as fh:
+        return tag, fh.read().strip()
+
+
 def test_semantic_index_health_retrain_and_recovery(spark, tmp_path):
     """The semantic tier's maintenance loop: a store built small stays
     healthy until absorbs grow the population ~4x past its geometry,
     retrain_semantic_index rebuilds at the adaptive k under the lock
     (verdicts == the scaled single-shot over the current population),
     and a crash mid-swap (old dirs moved out, new verdicts not yet in)
-    is healed by recover_semantic_retrain on the next read via the
-    build-tag audit."""
-    import shutil
+    is healed by swap.recover on the next read, leaving assign and
+    verdicts with one build tag."""
+    import pytest
 
     from last_minute_legends_spark.operators.dedup_delta import (
         _SEM_ASSIGN, _SEM_VERDICTS, absorb_semantic_delta,
-        recover_semantic_retrain, release_absorb_persists,
-        retrain_semantic_index, semantic_index_health,
-        write_semantic_index,
+        release_absorb_persists, retrain_semantic_index,
+        semantic_index_health, write_semantic_index,
     )
     from last_minute_legends_spark.operators.similarity import (
         semantic_keep, semantic_scaled_params, train_centroids,
@@ -1055,7 +1126,14 @@ def test_semantic_index_health_retrain_and_recovery(spark, tmp_path):
     p["k"] = 4
     _json.dump(p, open(pp, "w"))
     assert semantic_index_health(spark, idx)["retrain_recommended"]
-    retrain_semantic_index(spark, emb, idx)
+    # crash mid-swap: old dirs moved out, the new assign moved in, the
+    # new verdicts not yet in
+    with crash_at(moving_in(os.path.join(idx, _SEM_VERDICTS))), \
+            pytest.raises(Crash):
+        retrain_semantic_index(spark, emb, idx)
+    assert not os.path.isdir(os.path.join(idx, _SEM_VERDICTS))
+    assert swap.recover(idx), "recovery did not restore"
+    assert _sem_tags(idx)[0] == _sem_tags(idx)[1]
     h2 = semantic_index_health(spark, idx)
     assert not h2["retrain_recommended"] and h2["written_k"] == 16
     k, mod = semantic_scaled_params(4200)
@@ -1065,14 +1143,8 @@ def test_semantic_index_health_retrain_and_recovery(spark, tmp_path):
     got_df = (spark.read.parquet(os.path.join(idx, _SEM_VERDICTS))
               .select("id", "keep"))
     assert {(r.id, r.keep) for r in got_df.collect()} == expect
-    # crash mid-swap: old dirs moved out, new verdicts absent
-    old = idx + "__old_sem"
-    os.makedirs(old, exist_ok=True)
-    shutil.move(os.path.join(idx, _SEM_VERDICTS),
-                os.path.join(old, _SEM_VERDICTS))
-    assert recover_semantic_retrain(idx), "recovery did not restore"
     assert semantic_index_health(spark, idx)["written_k"] == 16
-    assert not os.path.isdir(old)
+    assert not os.path.isdir(f"{idx}__swap")
     emb.unpersist()
     release_absorb_persists()
 

@@ -283,15 +283,19 @@ def test_index_health_sees_train_empty_bucket_crowding(spark, tmp_path):
 
 
 def test_rebuild_crash_window_recovery(spark, tmp_path):
-    """rebuild_ivf_index's two-rename swap has an unavoidable window
-    where nothing serves at ``path`` (os.rename pairs cannot swap
+    """rebuild_ivf_index's swap has an unavoidable window where
+    nothing serves at ``path/data`` (os.rename pairs cannot swap
     directories atomically); a crash there strands the intact index
-    at ``path__old``. recover_interrupted_rebuild must restore it —
-    and must NOT clobber a live index with a stale ``__old`` left
-    behind by a swap that completed."""
+    in the swap's saved copies. swap.recover must restore it — and
+    must NOT clobber a live index with a stale saved copy left behind
+    by a swap that completed."""
+    import pytest
+
+    from last_minute_legends_spark.sources import swap
     from last_minute_legends_spark.sources.ivf_index import (
-        recover_interrupted_rebuild,
+        rebuild_ivf_index,
     )
+    from tests.swap_faults import Crash, crash_at, moving_out
 
     base = _clustered(spark, "b", groups=list(range(4)), per=50)
     cent = train_centroids(base, k=4, iters=3)
@@ -299,21 +303,58 @@ def test_rebuild_crash_window_recovery(spark, tmp_path):
     write_ivf_index(base, cent, root)
     before = _file_hashes(root)
 
+    def crashed_rebuild(at):
+        with crash_at(at), pytest.raises(Crash):
+            rebuild_ivf_index(spark, root, iters=1)
+
     # simulate the crash window: first rename done, second never ran
-    os.rename(root, f"{root}__old")
-    assert not os.path.exists(root)
-    assert recover_interrupted_rebuild(root) is True
+    crashed_rebuild(moving_out(os.path.join(root, "centroids")))
+    assert not os.path.exists(os.path.join(root, "data"))
+    assert swap.recover(root) is True
     assert _file_hashes(root) == before  # intact and serving again
-    assert not os.path.exists(f"{root}__old")
+    assert not os.path.exists(f"{root}__swap")
     # probes self-heal through the same hook
-    os.rename(root, f"{root}__old")
+    crashed_rebuild(moving_out(os.path.join(root, "centroids")))
     q = _clustered(spark, "b", groups=[0], per=1)
     assert probe_topk(spark, root, q, k=3, n_probe=2).count() == 3
 
-    # completed swap + leftover __old: recovery must be a no-op
-    os.makedirs(f"{root}__old")
-    assert recover_interrupted_rebuild(root) is False
+    # completed swap + leftover saved copies (a crash in the final
+    # cleanup): recovery must be a no-op
+    crashed_rebuild(lambda op, args: op == "rmtree")
+    assert os.path.isdir(os.path.join(f"{root}__swap", "saved"))
+    before = _file_hashes(root)
+    assert swap.recover(root) is False
     assert _file_hashes(root) == before
+
+
+def test_ivfpq_decode_rejects_corrupt_code_ids(spark, tmp_path):
+    """Index reads validate what they decode: a stored code id that is
+    not in its subspace's codebook is index corruption and must fail
+    the decode, never read as the neighbouring codeword."""
+    import json
+
+    import pytest
+
+    from last_minute_legends_spark.sources.ivfpq_index import _decode_codes
+
+    path = str(tmp_path / "pq")
+    spark.createDataFrame(
+        [(sub, cid, [float(cid), float(sub)], 1.0)
+         for sub in range(2) for cid in (0, 1, 2)],
+        "sub int, id int, v array<double>, nrm double",
+    ).write.parquet(os.path.join(path, "codebooks"))
+    with open(os.path.join(path, "_ivfpq_meta.json"), "w") as fh:
+        json.dump({"d_sub": 2, "m": 2}, fh)
+    schema = "id long, codes array<int>, bucket int"
+
+    good = spark.createDataFrame([(1, [0, 2], 0), (2, [1, 1], 0)], schema)
+    rv = {r.id: list(r.rv) for r in _decode_codes(spark, path, good)
+          .collect()}
+    assert rv == {1: [0.0, 0.0, 2.0, 1.0], 2: [1.0, 0.0, 1.0, 1.0]}
+    for code in (7, -1):  # past the end and before the start
+        bad = spark.createDataFrame([(3, [1, code], 0)], schema)
+        with pytest.raises(Exception, match="IVF-PQ index corruption"):
+            _decode_codes(spark, path, bad).collect()
 
 
 def test_ivfpq_append_byte_identity_and_probe(spark, sf_dir, tmp_path):

@@ -9,8 +9,12 @@
   merge-map key — every file in an untouched bucket survives
   byte-for-byte, and a no-op epoch (already-connected edges,
   already-known nodes) touches ZERO buckets;
-- crash/redelivery: re-folding the same epoch converges (confluent
-  merges), and a dir stranded mid-swap self-heals on the next read.
+- crash/redelivery: a fold crashed anywhere in its swap settles to
+  all-pre-fold or all-post-fold on the next read, and re-folding the
+  same epoch converges (confluent merges).
+
+The value-contract and crash tests run both fold paths: the local
+union-find and _merge_distributed (LOCAL_EDGES_MAX patched to 0).
 """
 
 from __future__ import annotations
@@ -18,8 +22,10 @@ from __future__ import annotations
 import hashlib
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from last_minute_legends_spark.operators import dedup
 from last_minute_legends_spark.operators.dedup import (
     connected_components,
     minhash_lsh_pairs,
@@ -27,12 +33,26 @@ from last_minute_legends_spark.operators.dedup import (
 from last_minute_legends_spark.operators.labels_store import (
     merge_labels_store,
     read_labels_store,
-    recover_labels_store,
     write_labels_store,
 )
+from last_minute_legends_spark.sources import swap
 from last_minute_legends_spark.sources.tables import Catalog
+from tests.swap_faults import (
+    Crash, committing, crash_at, moving_in, moving_out,
+)
 
 THRESHOLD = 0.8
+
+# LOCAL_EDGES_MAX caps the driver-side fold; the store reads it at call
+# time, so 0 sends every non-empty epoch down _merge_distributed and
+# the default keeps epoch-sized folds local
+MERGE_PATHS = (0, dedup.LOCAL_EDGES_MAX)
+
+
+def _merge_paths(monkeypatch):
+    for cap in MERGE_PATHS:
+        monkeypatch.setattr(dedup, "LOCAL_EDGES_MAX", cap)
+        yield cap
 
 
 def _labels(df) -> set:
@@ -56,24 +76,28 @@ def _edges(spark, rows):
     return spark.createDataFrame(rows, "doc_a long, doc_b long")
 
 
-def test_merge_semantics_synthetic(spark, tmp_path):
+def test_merge_semantics_synthetic(spark, tmp_path, monkeypatch):
     """Cluster merge, new-node insertion, singleton passthrough, and
     min-id keeper election — against a hand-checkable graph."""
-    path = str(tmp_path / "store")
-    # clusters {1,2} and {5,6}; singleton 9
-    base = spark.createDataFrame(
-        [(1, 1), (2, 1), (5, 5), (6, 5), (9, 9)], "id long, cluster_id long")
-    write_labels_store(base, path)
+    for cap in _merge_paths(monkeypatch):
+        path = str(tmp_path / f"store{cap}")
+        # clusters {1,2} and {5,6}; singleton 9
+        base = spark.createDataFrame(
+            [(1, 1), (2, 1), (5, 5), (6, 5), (9, 9)],
+            "id long, cluster_id long")
+        write_labels_store(base, path)
 
-    # edge bridging the two clusters + a brand-new node 42 joining 9
-    out = merge_labels_store(spark, path, _edges(spark, [(2, 6), (9, 42)]))
-    assert _labels(out) == {(1, 1), (2, 1), (5, 1), (6, 1),
-                            (9, 9), (42, 9)}
-    # persisted state agrees with the returned frame
-    assert _labels(read_labels_store(spark, path)) == _labels(out)
+        # edge bridging the two clusters + a brand-new node 42 joining 9
+        out = merge_labels_store(spark, path,
+                                 _edges(spark, [(2, 6), (9, 42)]))
+        assert _labels(out) == {(1, 1), (2, 1), (5, 1), (6, 1),
+                                (9, 9), (42, 9)}
+        # persisted state agrees with the returned frame
+        assert _labels(read_labels_store(spark, path)) == _labels(out)
 
 
-def test_merge_equals_full_cc_and_prunes_io(spark, sf_dir, tmp_path):
+def test_merge_equals_full_cc_and_prunes_io(spark, sf_dir, tmp_path,
+                                            monkeypatch):
     """End-to-end on the real corpus: base labels from the base pair
     graph, fold the delta epoch's new edges, compare against
     single-shot CC over ALL pairs. Then the I/O contract: at least
@@ -87,63 +111,67 @@ def test_merge_equals_full_cc_and_prunes_io(spark, sf_dir, tmp_path):
                                ["doc_a", "doc_b"], "left_anti").persist()
     assert new_edges.count() > 0, "vacuous: the epoch must add edges"
 
-    path = str(tmp_path / "store")
-    write_labels_store(connected_components(base_pairs), path)
-    h0 = _file_hashes(path)
-
-    # read-only form first: must equal the full recompute
+    base_labels = connected_components(base_pairs).localCheckpoint()
     expect = _labels(connected_components(all_pairs))
-    ro = merge_labels_store(spark, path, new_edges, write=False)
-    assert _labels(ro) == expect
-    assert _file_hashes(path) == h0, "write=False must not mutate"
+    for cap in _merge_paths(monkeypatch):
+        path = str(tmp_path / f"store{cap}")
+        write_labels_store(base_labels, path)
+        h0 = _file_hashes(path)
 
-    # write form: same value, epoch-sized rewrite
-    out = merge_labels_store(spark, path, new_edges, write=True)
-    assert _labels(out) == expect
-    h1 = _file_hashes(path)
-    untouched = [f for f in h0 if f in h1 and h1[f] == h0[f]]
-    assert untouched, "every bucket rewritten — pruning is broken"
-    # byte identity is per-directory: a dir either survived whole or
-    # was swapped whole
-    changed_dirs = {os.path.dirname(f) for f in set(h0) ^ set(h1)} | {
-        os.path.dirname(f) for f in h0 if f in h1 and h0[f] != h1[f]}
-    for f in h0:
-        if os.path.dirname(f) not in changed_dirs:
-            assert h1.get(f) == h0[f]
+        # read-only form first: must equal the full recompute
+        ro = merge_labels_store(spark, path, new_edges, write=False)
+        assert _labels(ro) == expect
+        assert _file_hashes(path) == h0, "write=False must not mutate"
 
-    # redelivery: folding the SAME epoch again is a no-op — zero
-    # bucket dirs change (confluence makes the retry safe without
-    # epoch-versioned state)
-    again = merge_labels_store(spark, path, new_edges, write=True)
-    assert _labels(again) == expect
-    assert _file_hashes(path) == h1
+        # write form: same value, epoch-sized rewrite
+        out = merge_labels_store(spark, path, new_edges, write=True)
+        assert _labels(out) == expect
+        h1 = _file_hashes(path)
+        untouched = [f for f in h0 if f in h1 and h1[f] == h0[f]]
+        assert untouched, "every bucket rewritten — pruning is broken"
+        # byte identity is per-directory: a dir either survived whole
+        # or was swapped whole
+        changed_dirs = {os.path.dirname(f) for f in set(h0) ^ set(h1)} | {
+            os.path.dirname(f) for f in h0 if f in h1 and h0[f] != h1[f]}
+        for f in h0:
+            if os.path.dirname(f) not in changed_dirs:
+                assert h1.get(f) == h0[f]
+
+        # redelivery: folding the SAME epoch again is a no-op — zero
+        # bucket dirs change (confluence makes the retry safe without
+        # epoch-versioned state)
+        again = merge_labels_store(spark, path, new_edges, write=True)
+        assert _labels(again) == expect
+        assert _file_hashes(path) == h1
     for fr in (base_pairs, all_pairs, new_edges):
         fr.unpersist()
 
 
-def test_empty_store_roundtrip_and_merge(spark, tmp_path):
+def test_empty_store_roundtrip_and_merge(spark, tmp_path, monkeypatch):
     """A seed corpus with NO duplicate pairs yet yields an EMPTY
     store — zero partition dirs. The recorded schema must make reads
     work (UNABLE_TO_INFER_SCHEMA otherwise — hit at sf0.01 where the
     stream seed quarter has no intra-quarter pairs), and the first
     real epoch must fold into it."""
-    path = str(tmp_path / "store")
-    write_labels_store(
-        spark.createDataFrame([], "id long, cluster_id long"), path)
-    assert read_labels_store(spark, path).count() == 0
-    out = merge_labels_store(spark, path, _edges(spark, [(2, 7)]))
-    assert _labels(out) == {(2, 2), (7, 2)}
-    assert _labels(read_labels_store(spark, path)) == {(2, 2), (7, 2)}
+    for cap in _merge_paths(monkeypatch):
+        path = str(tmp_path / f"store{cap}")
+        write_labels_store(
+            spark.createDataFrame([], "id long, cluster_id long"), path)
+        assert read_labels_store(spark, path).count() == 0
+        out = merge_labels_store(spark, path, _edges(spark, [(2, 7)]))
+        assert _labels(out) == {(2, 2), (7, 2)}
+        assert _labels(read_labels_store(spark, path)) == {(2, 2), (7, 2)}
 
 
-def test_noop_epoch_touches_zero_buckets(spark, tmp_path):
-    path = str(tmp_path / "store")
-    write_labels_store(spark.createDataFrame(
-        [(1, 1), (2, 1)], "id long, cluster_id long"), path)
-    h0 = _file_hashes(path)
-    out = merge_labels_store(spark, path, _edges(spark, [(1, 2)]))
-    assert _labels(out) == {(1, 1), (2, 1)}
-    assert _file_hashes(path) == h0
+def test_noop_epoch_touches_zero_buckets(spark, tmp_path, monkeypatch):
+    for cap in _merge_paths(monkeypatch):
+        path = str(tmp_path / f"store{cap}")
+        write_labels_store(spark.createDataFrame(
+            [(1, 1), (2, 1)], "id long, cluster_id long"), path)
+        h0 = _file_hashes(path)
+        out = merge_labels_store(spark, path, _edges(spark, [(1, 2)]))
+        assert _labels(out) == {(1, 1), (2, 1)}
+        assert _file_hashes(path) == h0
 
 
 def test_stream_epoch_label_redelivery_converges(spark, sf_dir,
@@ -191,60 +219,93 @@ def test_stream_epoch_label_redelivery_converges(spark, sf_dir,
 
 def test_merge_lock_serializes_and_recovery_skips_live(spark, tmp_path):
     """Concurrency discipline (the band-index lessons, pre-empted):
-    a write-fold against a store whose merge lock names a LIVE
+    a write-fold against a store whose writer lock names a LIVE
     foreign owner refuses (interleaved bucket swaps would corrupt the
     labeling); probe-side recovery skips the apparent mid-swap state
     of a live fold; a DEAD owner's lock is stolen, its stale staging
     dir swept, and the fold proceeds."""
     import subprocess
 
-    import pytest
-
     path = str(tmp_path / "store")
     write_labels_store(spark.createDataFrame(
         [(1, 1), (2, 1)], "id long, cluster_id long"), path)
     root = os.path.join(path, "labels")
+    lock = swap.lock_path(root)
+    work = f"{root}__swap"
+
+    # a fold that crashed with its buckets moved out, before its commit
+    with crash_at(committing), pytest.raises(Crash):
+        merge_labels_store(spark, path, _edges(spark, [(1, 5)]))
+    stale = [os.path.join(work, d) for d in os.listdir(work)
+             if d.startswith("staged_")]
+    assert stale and os.listdir(os.path.join(work, "saved"))
 
     proc = subprocess.Popen(["sleep", "60"])
     try:
-        with open(f"{path}__merge.lock", "w") as fh:
+        with open(lock, "w") as fh:
             fh.write(str(proc.pid))
         with pytest.raises(RuntimeError, match="in flight"):
             merge_labels_store(spark, path, _edges(spark, [(1, 5)]))
-        bucket = next(d for d in os.listdir(root)
-                      if d.startswith("lbk="))
-        os.rename(os.path.join(root, bucket),
-                  os.path.join(root, bucket + "__old"))
-        assert recover_labels_store(path) is False  # live fold: skip
-        os.rename(os.path.join(root, bucket + "__old"),
-                  os.path.join(root, bucket))
+        assert swap.recover(root) is False  # live fold: skip
+        assert os.listdir(os.path.join(work, "saved"))
     finally:
         proc.kill()
         proc.wait()
 
     # dead owner: lock stolen, stale staging swept, fold proceeds
-    with open(f"{path}__merge.lock", "w") as fh:
+    with open(lock, "w") as fh:
         fh.write(str(proc.pid))
-    stale = os.path.join(path, f"labels__merge_staged_{proc.pid}")
-    os.makedirs(stale)
     out = merge_labels_store(spark, path, _edges(spark, [(1, 5)]))
     assert _labels(out) == {(1, 1), (2, 1), (5, 1)}
-    assert not os.path.exists(stale)
-    assert not os.path.exists(f"{path}__merge.lock")
+    assert not any(os.path.exists(d) for d in stale)
+    assert not os.path.exists(lock)
 
 
 def test_recover_stranded_bucket_dir(spark, tmp_path):
-    """A crash between the rename-out and rename-in of a bucket swap
-    leaves ``lbk=<b>__old`` beside a missing live dir — the next read
-    restores it."""
+    """A crash between the rename-out and rename-in of a fold's bucket
+    swap (before its commit) leaves the live bucket dirs missing — the
+    next read restores them."""
     path = str(tmp_path / "store")
     write_labels_store(spark.createDataFrame(
         [(1, 1), (2, 1), (5, 5)], "id long, cluster_id long"), path)
     before = _labels(read_labels_store(spark, path))
     root = os.path.join(path, "labels")
-    bucket = next(d for d in os.listdir(root)
-                  if d.startswith("lbk=") and not d.endswith("__old"))
-    os.rename(os.path.join(root, bucket),
-              os.path.join(root, bucket + "__old"))
-    assert recover_labels_store(path) is True
+    with crash_at(committing), pytest.raises(Crash):
+        merge_labels_store(spark, path, _edges(spark, [(2, 5)]))
+    assert swap.recover(root) is True
     assert _labels(read_labels_store(spark, path)) == before
+
+
+@pytest.mark.parametrize("cap", MERGE_PATHS, ids=["distributed", "local"])
+def test_fold_crash_loses_no_rows(spark, tmp_path, monkeypatch, cap):
+    """A fold that merges cluster 7 (rows 7, 1007, 2007) into cluster
+    1 rewrites two buckets: 7's bucket loses those rows and 1's bucket
+    gains them. Replaced one bucket at a time, a crash between the two
+    dropped the rows for good — 7's bucket already rewritten, 1's not
+    — and re-folding the edge could only restore the endpoint 7.
+    Crashed before or after its commit, the fold must now settle to
+    the whole old or the whole new labeling, lose no id, and a
+    re-fold must equal connected_components over all edges."""
+    monkeypatch.setattr(dedup, "LOCAL_EDGES_MAX", cap)
+    old = {(1, 1), (7, 7), (1007, 7), (2007, 7)}
+    new = {(i, 1) for i, _ in old}
+    expect = _labels(connected_components(
+        _edges(spark, [(7, 1007), (7, 2007), (1, 7)])))
+    assert expect == new
+    for name, at in (("before commit", "out"), ("after commit", "in")):
+        path = str(tmp_path / f"store_{at}")
+        write_labels_store(spark.createDataFrame(
+            sorted(old), "id long, cluster_id long"), path, n_buckets=16)
+        root = os.path.join(path, "labels")
+        bucket = {r.cluster_id: r.lbk for r in spark.read.parquet(root)
+                  .select("cluster_id", "lbk").distinct().collect()}
+        assert bucket[1] != bucket[7], "vacuous: one bucket"
+        # the destination bucket is the last one the old swap reached
+        dest = os.path.join(root, f"lbk={bucket[1]}")
+        point = moving_out(dest) if at == "out" else moving_in(dest)
+        with crash_at(point), pytest.raises(Crash):
+            merge_labels_store(spark, path, _edges(spark, [(1, 7)]))
+        got = _labels(read_labels_store(spark, path))
+        assert got == (old if at == "out" else new), name
+        refold = merge_labels_store(spark, path, _edges(spark, [(1, 7)]))
+        assert _labels(refold) == expect, name

@@ -1746,6 +1746,46 @@ def test_merge_rewrites_only_touched_days(spark, tmp_path):
     assert after == before
 
 
+def test_merge_day_partitioned_crash_is_all_or_nothing(spark, tmp_path):
+    """A merge that touches two days and crashes between them — the
+    first day's directory already moved, the second not — must leave
+    the table all-old (crash before the swap's commit) or all-new
+    (after it) on the next read; never one day merged and the other
+    not, and never a day missing (the staged copy used to sit where
+    no read path restored it)."""
+    import os
+
+    from last_minute_legends_spark.sources.partitioned_events import (
+        list_days, merge_day_partitioned, read_day_range,
+        write_day_partitioned,
+    )
+    from tests.swap_faults import Crash, crash_at, moving_in, moving_out
+
+    base = _day_rows(spark)
+    old = {tuple(r) for r in base.collect()}
+    for at in (moving_out, moving_in):
+        path = str(tmp_path / f"t_{at.__name__}")
+        write_day_partitioned(base, path)
+        days = list_days(path)[1:3]  # 2024-01-02 and 2024-01-03
+        changes = spark.createDataFrame(
+            [(1, dt.datetime(2024, 1, 2, 8), 101, "view", 999.0, "{}",
+              days[0]),
+             (2, dt.datetime(2024, 1, 3, 8), 102, "view", 998.0, "{}",
+              days[1])],
+            "event_id long, ts timestamp, user_id long, "
+            "event_type string, value double, props string, "
+            "event_day_us long")
+        new = {r for r in old if r[0] not in (1, 2)} | {
+            tuple(r)[:6] for r in changes.collect()}
+        second = os.path.join(path, f"event_day_us={days[1]}")
+        with crash_at(at(second)), pytest.raises(Crash):
+            merge_day_partitioned(spark, path, changes)
+        got = {tuple(r) for r in read_day_range(spark, path, 0)
+               .select(*base.columns).collect()}
+        assert got == (old if at is moving_out else new), at.__name__
+        assert not os.path.exists(f"{path}__swap")
+
+
 def test_compact_day_partitions(spark, tmp_path):
     """Compaction must bin-pack each day into its byte quota of files
     (huge target → exactly 1 file/day), preserve content exactly, and
